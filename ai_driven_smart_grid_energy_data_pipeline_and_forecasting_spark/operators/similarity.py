@@ -1,9 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
-- Brute-force cosine top-k: the exact baseline. Query set broadcast
-  against the corpus; the corpus streams through an Arrow-batched
-  numpy kernel (mapInPandas); top-k via rank window partitioned by
-  query.
+- Scored top-k (brute force, IVF, int8/SQ8, PQ, IVFADC): one skeleton,
+  the FAISS index-factory split of a candidate source × a scorer
+  (Johnson, Douze & Jégou, arXiv:1702.08734). Two candidate sources:
+  the *flat scan* streams the corpus (or its codes) through
+  ``mapInPandas`` against the broadcast queries, dropping self-pairs
+  by an id mask; the *IVF probe scan* joins broadcast (query, cell)
+  probes to the cell-assigned corpus and filters self-pairs. A
+  scorer only supplies what is broadcast and how one Arrow batch
+  turns into a score per (query, neighbor) pair. Everything after is
+  written once: the per-batch ≤ |Q|·k cut (``_batch_topk_cut``) and
+  the final rank window (``_rank_window``), both ordering by score
+  desc, then neighbor id.
+- NaN ordering rule: a NaN score (a zero-norm cosine) leaves
+  ``mapInPandas`` as NULL — Arrow maps pandas NaN to null — and
+  Spark's ``desc`` ranks NULL after every number, as do the DuckDB
+  oracles (``/`` by zero yields NULL, ordered NULLS LAST). So the cut
+  ranks NaN below every number too, and keeps those rows rather than
+  dropping them.
 - Threshold pairs: all corpus pairs above a cosine cutoff (near-dup by
   embedding).
 - Random-hyperplane LSH (scale path): sign-bit signatures from
@@ -84,22 +98,20 @@ def _batch_topk_cut(
     qids: np.ndarray, nids: np.ndarray, sim: np.ndarray, k: int
 ) -> np.ndarray:
     """Row indices of each query's top-k WITHIN one Arrow batch of
-    row-paired (query, neighbor, sim) candidates, under the engines'
-    total order: sim desc with NaN ranked ABOVE +inf (Spark and DuckDB
-    both sort NaN greatest, so a pre-cut that dropped NaN rows would
-    diverge from the rank window on degenerate inputs), ties by
-    neighbor id asc. The global top-k under the same order is a
-    subset of the union of per-batch cuts, so the downstream window
-    sees ≤ |Q|·k rows per task instead of the whole probed fraction —
-    at a 10⁹-row corpus the uncut plan concentrates one query's
-    every candidate in a single window partition. The explicit
-    isnan sort key keeps NaN strictly above +inf (both map to the
-    same -inf value key, so without it a +inf row with a smaller
-    neighbor id would outrank a NaN row at a k boundary — the
-    opposite of the engines' NaN-greatest total order)."""
-    isn = np.isnan(sim)
-    key = np.where(isn, -np.inf, -sim)
-    order = np.lexsort((nids, key, ~isn, qids))
+    row-paired (query, neighbor, sim) candidates, under the rank
+    window's order: sim desc with NaN below every number, ties by
+    neighbor id asc. A NaN score reaches the window as NULL (Arrow
+    maps pandas NaN to null), which Spark's ``desc`` and the DuckDB
+    oracles' NULLS LAST both rank after every value — so NaN rows
+    sort last here (``np.lexsort`` puts NaN of ``-sim`` last) but are
+    kept, and a query with fewer than k numeric neighbors still gets
+    the trailing NULL-sim rows its oracle has. The global top-k under
+    the same order is a subset of the union of per-batch cuts, so the
+    downstream window sees ≤ |Q|·k rows per batch instead of the
+    whole scanned fraction — at a 10⁹-row corpus the uncut plan
+    concentrates one query's every candidate in a single window
+    partition."""
+    order = np.lexsort((nids, -sim, qids))
     sq = qids[order]
     starts = np.r_[0, np.flatnonzero(sq[1:] != sq[:-1]) + 1]
     sizes = np.diff(np.r_[starts, len(sq)])
@@ -131,12 +143,13 @@ def _unpack_codes(col: pd.Series, dims: int) -> np.ndarray:
     )
 
 
-def _as_matrix(col: pd.Series, dims: int) -> np.ndarray:
-    """Stack an Arrow list<float> column into an (n, dims) float64
-    matrix — float32→float64 widening matches Spark's cast."""
+def _as_matrix(col: pd.Series, dims: int, dtype=np.float64) -> np.ndarray:
+    """Stack an Arrow list column into an (n, dims) matrix — float64 by
+    default (float32→float64 widening matches Spark's cast); int64 for
+    code columns, widened for the exact integer dot."""
     if len(col) == 0:
-        return np.empty((0, dims), dtype=np.float64)
-    return np.stack([np.asarray(v, dtype=np.float64) for v in col])
+        return np.empty((0, dims), dtype=dtype)
+    return np.stack([np.asarray(v, dtype=dtype) for v in col])
 
 
 def _ordered_norms(m: np.ndarray) -> np.ndarray:
@@ -174,6 +187,125 @@ def _ordered_rowdot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return acc
 
 
+# ------------------------------------------------ scored top-k skeleton
+
+
+def _rank_window(scored: DataFrame, k: int, sim_col: str) -> DataFrame:
+    """The final exact top-k over the per-batch cuts: ``row_number``
+    per query over (``sim_col`` desc, neighbor_id), ``rank <= k``,
+    ordered by (query_id, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(sim_col), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
+
+
+def _scored_topk(
+    cand: DataFrame, pairs, k: int, fields: str, sim_col: str
+) -> DataFrame:
+    """The one body both candidate sources end in: ``pairs`` turns an
+    Arrow batch of ``cand`` into row-paired (query ids, neighbor ids,
+    {column: values}) — ``fields`` is those columns' schema, including
+    ``sim_col`` — which the per-batch cut trims to ≤ |Q|·k rows before
+    the rank window."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qid, nid, cols = pairs(pdf)
+            keep = _batch_topk_cut(qid, nid, cols[sim_col], k)
+            yield pd.DataFrame(
+                {"query_id": qid[keep], "neighbor_id": nid[keep]}
+                | {c: v[keep] for c, v in cols.items()}
+            )
+
+    scored = cand.mapInPandas(
+        kernel, f"query_id long, neighbor_id long, {fields}"
+    )
+    return _rank_window(scored, k, sim_col)
+
+
+def _flat_scan(
+    corpus: DataFrame,
+    id_col: str,
+    q_ids: np.ndarray,
+    payload,
+    score,
+    k: int,
+    fields: str = "sim double",
+    sim_col: str = "sim",
+) -> DataFrame:
+    """Flat candidate source: every ``corpus`` row is a candidate for
+    every query. The query ids and the scorer's ``payload`` are
+    broadcast; ``score(payload, pdf)`` maps one corpus batch to
+    {column: (batch rows × queries) matrix}. Self-pairs are dropped by
+    an id mask."""
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, payload))
+
+    def pairs(pdf: pd.DataFrame):
+        ids_q, pl = bc.value
+        ids_c = pdf[id_col].to_numpy(dtype=np.int64)
+        qid = np.tile(ids_q, len(ids_c))
+        nid = np.repeat(ids_c, len(ids_q))
+        keep = qid != nid
+        cols = {c: v.reshape(-1)[keep] for c, v in score(pl, pdf).items()}
+        return qid[keep], nid[keep], cols
+
+    return _scored_topk(corpus, pairs, k, fields, sim_col)
+
+
+def _probe_scan(
+    probes: DataFrame,
+    assigned: DataFrame,
+    key: str,
+    q_ids: np.ndarray,
+    payload,
+    score,
+    k: int,
+    fields: str = "sim double",
+    sim_col: str = "sim",
+) -> DataFrame:
+    """IVF candidate source: the broadcast (query_id, ``key``) probe
+    table joins the cell-assigned corpus (``key``, neighbor_id, …),
+    self-pairs are filtered, and each joined row is scored:
+    ``score(payload, qi, pdf)`` gets every row's index into ``q_ids``
+    and returns {column: per-row values}."""
+    cand = (
+        F.broadcast(probes)
+        .join(assigned, key)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+    bc = assigned.sparkSession.sparkContext.broadcast((q_ids, payload))
+
+    def pairs(pdf: pd.DataFrame):
+        ids_q, pl = bc.value
+        row = {int(q): i for i, q in enumerate(ids_q)}
+        qid = pdf["query_id"].to_numpy(dtype=np.int64)
+        qi = np.asarray([row[q] for q in qid.tolist()], dtype=np.int64)
+        nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        return qid, nid, score(pl, qi, pdf)
+
+    return _scored_topk(cand, pairs, k, fields, sim_col)
+
+
+def _collect_queries(
+    emb: DataFrame, query_filter: Column, dims: int, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The query side of every scored top-k: ``query_filter`` applied
+    to ``emb`` (so it may reference the embedding column), collected
+    as (ids, float64 matrix) — |Q| rows, the broadcast build side."""
+    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
+    return (
+        qpdf[id_col].to_numpy(dtype=np.int64),
+        _as_matrix(qpdf[vec_col], dims),
+    )
+
+
 def ann_bruteforce_topk(
     emb: DataFrame,
     query_filter: Column,
@@ -207,53 +339,19 @@ def ann_bruteforce_topk(
     """
     if metric not in ("cosine", "dot"):
         raise ValueError(f"ann_bruteforce_topk: unknown metric {metric!r}")
-    spark = emb.sparkSession
-    qpdf = (
-        emb.filter(query_filter)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .toPandas()
-    )
-    q_ids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf["qv"], dims)
-    q_norm = _ordered_norms(q_mat) if len(q_ids) else np.empty(0)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
+    q_ids, q_mat = _collect_queries(emb, query_filter, dims, id_col, vec_col)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mq, nq = bc.value
-        if len(ids_q) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mc = _as_matrix(pdf[vec_col], dims)
-            ids_c = pdf[id_col].to_numpy(dtype=np.int64)
-            sim = _ordered_gemm(mq, mc)
-            if metric == "cosine":
-                nc = _ordered_norms(mc)
-                sim = sim / np.multiply.outer(nq, nc)
-            sim[np.equal.outer(ids_q, ids_c)] = -np.inf  # self-match
-            # per-batch candidate cut under the full (sim desc, id asc)
-            # order so global top-k survives ties at the boundary
-            for qi in range(len(ids_q)):
-                order = np.lexsort((ids_c, -sim[qi]))[: min(k, len(ids_c))]
-                keep = order[np.isfinite(sim[qi][order])]
-                if len(keep):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_q[qi],
-                            "neighbor_id": ids_c[keep],
-                            "sim": sim[qi][keep],
-                        }
-                    )
+    def score(q, pdf: pd.DataFrame) -> dict:
+        mq, nq = q
+        mc = _as_matrix(pdf[vec_col], dims)
+        sim = _ordered_gemm(mc, mq)
+        if metric == "cosine":
+            sim = sim / np.multiply.outer(_ordered_norms(mc), nq)
+        return {"sim": sim}
 
-    scored = emb.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _flat_scan(
+        emb.select(id_col, vec_col), id_col, q_ids,
+        (q_mat, _ordered_norms(q_mat)), score, k,
     )
 
 
@@ -524,8 +622,8 @@ def _head_centroids(
     id_col: str,
     vec_col: str,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic id-ordered head-sample coarse quantizer shared by
-    the whole IVF family (fixed sample — Lloyd refinement is an
+    """Deterministic id-ordered head-sample coarse quantizer (rows with
+    id < ``n_centroids``; a fixed sample — Lloyd refinement is an
     offline concern that changes centroid quality, not plan shape).
     Returns (c_ids, c_mat) sorted by centroid id so argmax-first-max
     ties resolve to the smallest id (the SQL ORDER BY convention)."""
@@ -542,17 +640,29 @@ def _head_centroids(
         )
     order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
     c_ids = cpdf[id_col].to_numpy(dtype=np.int64)[order]
-    c_mat = _as_matrix(cpdf[vec_col], dims)[order]
+    return c_ids, _as_matrix(cpdf[vec_col], dims)[order]
+
+
+def _ivf_centroids(
+    emb: DataFrame,
+    n_centroids: int,
+    dims: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``_head_centroids`` for the head-sample IVF top-k family, which
+    also refuses a degenerate head."""
+    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
     c_norm = _ordered_norms(c_mat)
     bad = ~(np.isfinite(c_norm) & (c_norm > 0.0))
     if bad.any():
         # a zero-norm (or NaN/Inf-bearing) centroid makes its cosine
         # NaN in the numpy kernels but NULL in the oracle SQL (DuckDB
-        # `/` yields NULL on zero divisors), and the two rank a MIXED
-        # NaN/finite probe column differently (numpy: NaN last; the
-        # engines: NaN greatest / NULL last respectively) — the
-        # hash-exact contract cannot hold, so refuse loudly instead
-        # of silently probing different cells (ADVICE r13 #2)
+        # `/` yields NULL on zero divisors): np.argmax takes a NaN
+        # column as the maximum, while the oracle's ORDER BY ... DESC
+        # ranks NULL last, so the two would assign vectors to
+        # different cells — the hash-exact contract cannot hold, so
+        # refuse loudly instead (ADVICE r13 #2)
         raise ValueError(
             "degenerate centroid head: rows "
             f"{c_ids[bad][:8].tolist()} have zero or non-finite norm — "
@@ -561,6 +671,78 @@ def _head_centroids(
             "variant"
         )
     return c_ids, c_mat
+
+
+def _angular_assign(
+    mx: np.ndarray, c_mat: np.ndarray, c_norm: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's angular-nearest centroid: (row index into ``c_mat``,
+    that cosine). argmax takes the first maximum and centroids are
+    id-sorted, so ties resolve to the smallest centroid id (the SQL
+    ORDER BY sim DESC, cid ASC convention); an all-NaN row (a
+    zero-norm vector) lands in the first cell, as the oracle's
+    NULLS-LAST order puts it."""
+    sim = _ordered_gemm(mx, c_mat) / np.multiply.outer(
+        _ordered_norms(mx), c_norm
+    )
+    best = np.argmax(sim, axis=1)
+    return best, sim[np.arange(len(best)), best]
+
+
+def _cell_scan(
+    emb: DataFrame,
+    c_ids: np.ndarray,
+    c_mat: np.ndarray,
+    dims: int,
+    id_col: str,
+    vec_col: str,
+    encode,
+    fields: str,
+) -> DataFrame:
+    """One streamed corpus pass assigning every row its angular cell
+    (centroids broadcast, no shuffle). Emits the columns
+    ``encode(pdf, mx, best, best_sim, c_mat)`` returns (schema
+    ``fields``) plus ``cluster``, the assigned centroid id."""
+    bc = emb.sparkSession.sparkContext.broadcast(
+        (c_ids, c_mat, _ordered_norms(c_mat))
+    )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_c, mc, nc = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            mx = _as_matrix(pdf[vec_col], dims)
+            best, best_sim = _angular_assign(mx, mc, nc)
+            yield pd.DataFrame(
+                encode(pdf, mx, best, best_sim, mc) | {"cluster": ids_c[best]}
+            )
+
+    return emb.select(id_col, vec_col).mapInPandas(
+        kernel, f"{fields}, cluster long"
+    )
+
+
+def _probe_table(
+    spark,
+    q_ids: np.ndarray,
+    qsim: np.ndarray,
+    c_ids: np.ndarray,
+    n_probe: int,
+    key: str = "cluster",
+) -> DataFrame:
+    """(query_id, ``key``) probe table: each query's ``n_probe``
+    highest-``qsim`` cells, ties by cell id. Tiny by construction
+    (|Q|·n_probe rows) — always broadcast."""
+    rows = [
+        (int(q), int(c_ids[j]))
+        for i, q in enumerate(q_ids)
+        for j in np.lexsort((c_ids, -qsim[i]))[:n_probe]
+    ]
+    probes = spark.createDataFrame(
+        rows or [(-1, -1)], f"query_id long, {key} long"
+    )
+    return probes if rows else probes.filter(F.lit(False))
 
 
 def _angular_probes(
@@ -575,30 +757,18 @@ def _angular_probes(
     """(query_id, cluster) probe table: each query's ``n_probe``
     angular-nearest cells (cosine on raw vectors — assignment and
     probing stay angular for every metric; ties by centroid id).
-    Tiny by construction (|Q|·n_probe rows) — always broadcast.
 
-    Degenerate-input contract: ``_head_centroids`` rejects zero-norm
+    Degenerate-input contract: ``_ivf_centroids`` rejects zero-norm
     and non-finite centroid rows, so a probe key can be NaN only when
     the QUERY is zero-norm — an all-NaN row, where np.lexsort's
     stable fallback to the ``c_ids`` key gives cid-ascending, exactly
     the oracle's ``ORDER BY cos DESC, cid`` over an all-NULL column
     (DuckDB's ``/`` yields NULL on zero divisors and sorts NULLs
-    last; ties resolve by cid). A MIXED NaN/finite column — the one
-    shape where numpy's NaN-last and the engines' orders could ever
-    disagree — cannot reach this sort."""
-    probe_rows: list[tuple[int, int]] = []
-    if len(q_ids):
-        q_norm = _ordered_norms(q_mat)
-        qsim = _ordered_gemm(q_mat, c_mat) / np.multiply.outer(q_norm, c_norm)
-        for i in range(len(q_ids)):
-            top = np.lexsort((c_ids, -qsim[i]))[:n_probe]
-            probe_rows.extend((int(q_ids[i]), int(c_ids[j])) for j in top)
-    probes = spark.createDataFrame(
-        probe_rows or [(-1, -1)], "query_id long, cluster long"
+    last; ties resolve by cid)."""
+    qsim = _ordered_gemm(q_mat, c_mat) / np.multiply.outer(
+        _ordered_norms(q_mat), c_norm
     )
-    if not probe_rows:
-        probes = probes.filter(F.lit(False))
-    return probes
+    return _probe_table(spark, q_ids, qsim, c_ids, n_probe)
 
 
 def ann_ivf_topk(
@@ -637,7 +807,7 @@ def ann_ivf_topk(
     alternative to ``cosine_threshold_pairs`` alongside
     ``ann_lsh_pairs``.
     """
-    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
+    c_ids, c_mat = _ivf_centroids(emb, n_centroids, dims, id_col, vec_col)
     return _ivf_flow(
         emb, query_filter, c_ids, c_mat, k, n_probe, dims, id_col,
         vec_col, metric,
@@ -663,79 +833,31 @@ def _ivf_flow(
     angular; see ``ann_ivf_topk``)."""
     if metric not in ("cosine", "dot"):
         raise ValueError(f"_ivf_flow: unknown metric {metric!r}")
-    spark = emb.sparkSession
-    c_norm = _ordered_norms(c_mat)
-    bc_c = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            sim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            # argmax takes the first maximum — centroids are id-sorted,
-            # so ties resolve to the smallest centroid id (= the SQL
-            # ORDER BY sim DESC, cid ASC convention)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "v": pdf[vec_col],
-                    "cluster": ids_c[np.argmax(sim, axis=1)],
-                }
-            )
-
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign, "neighbor_id long, v array<float>, cluster long"
+    assigned = _cell_scan(
+        emb, c_ids, c_mat, dims, id_col, vec_col,
+        lambda pdf, mx, best, best_sim, mc: {
+            "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
+            "v": pdf[vec_col],
+        },
+        "neighbor_id long, v array<float>",
+    )
+    q_ids, q_mat = _collect_queries(emb, query_filter, dims, id_col, vec_col)
+    probes = _angular_probes(
+        emb.sparkSession, q_ids, q_mat, c_ids, c_mat, _ordered_norms(c_mat),
+        n_probe,
     )
 
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    q_norm = _ordered_norms(q_mat) if len(q_ids) else np.empty(0)
-    probes = _angular_probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe)
-    bc_q = spark.sparkContext.broadcast(
-        {int(q_ids[i]): (q_mat[i], float(q_norm[i])) for i in range(len(q_ids))}
-    )
+    def score(q, qi: np.ndarray, pdf: pd.DataFrame) -> dict:
+        mq, nq = q
+        mx = _as_matrix(pdf["v"], dims)
+        sim = _ordered_rowdot(mq[qi], mx)
+        if metric == "cosine":
+            sim = sim / (nq[qi] * _ordered_norms(mx))
+        return {"sim": sim}
 
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = bc_q.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf["v"], dims)
-            qm = np.stack([qmap[q][0] for q in pdf["query_id"]])
-            sim = _ordered_rowdot(qm, mx)
-            if metric == "cosine":
-                nx = _ordered_norms(mx)
-                qn = np.asarray([qmap[q][1] for q in pdf["query_id"]])
-                sim = sim / (qn * nx)
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            # per-batch ≤ Q·k cut (r13): same discipline as the
-            # bruteforce/PQ/ADC kernels — see _batch_topk_cut
-            keep = _batch_topk_cut(qid, nid, sim, k)
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[keep],
-                    "neighbor_id": nid[keep],
-                    "sim": sim[keep],
-                }
-            )
-
-    scored = cand.mapInPandas(score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _probe_scan(
+        probes, assigned, "cluster", q_ids,
+        (q_mat, _ordered_norms(q_mat)), score, k,
     )
 
 
@@ -801,40 +923,11 @@ def cluster_assign_stats(
     invariant: counts plus min/max of similarities (no float sums), so
     the DuckDB oracle matches bit-exactly.
     """
-    spark = emb.sparkSession
-    cpdf = (
-        emb.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).toPandas()
-    )
-    if len(cpdf) == 0:
-        raise ValueError(
-            f"no centroid rows: filter {id_col} < {n_centroids} matched "
-            "nothing (ids not starting at 0?) — supply a corpus whose id "
-            "head exists, or use the trained-KMeans variant"
-        )
-    c_order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
-    c_ids = cpdf[id_col].to_numpy(dtype=np.int64)[c_order]
-    c_mat = _as_matrix(cpdf[vec_col], dims)[c_order]
-    c_norm = _ordered_norms(c_mat)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            sim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            best = np.argmax(sim, axis=1)  # ties -> smallest centroid id
-            yield pd.DataFrame(
-                {
-                    "cluster": ids_c[best],
-                    "sim": sim[np.arange(len(best)), best],
-                }
-            )
-
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign, "cluster long, sim double"
+    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
+    assigned = _cell_scan(
+        emb, c_ids, c_mat, dims, id_col, vec_col,
+        lambda pdf, mx, best, best_sim, mc: {"sim": best_sim},
+        "sim double",
     )
     return (
         assigned.groupBy("cluster")
@@ -1367,6 +1460,18 @@ def mips_lsh_pairs(
     ).orderBy("vec_a", "vec_b")
 
 
+def _sq8_encode(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Symmetric per-row int8 scalar quantization → (scale, int32
+    codes in [-127, 127]): scale = max|v| / 127, q = floor(v/scale +
+    0.5) (explicit round-half-up — numpy's rint is half-even and
+    DuckDB's round is half-away, so neither is used: floor(x+0.5) is
+    bit-identical everywhere). Zero rows quantize to zeros with scale
+    0."""
+    scale = np.abs(m).max(axis=1) / 127.0
+    safe = np.where(scale == 0.0, 1.0, scale)
+    return scale, np.floor(m / safe[:, None] + 0.5).astype(np.int32)
+
+
 def quantize_embeddings(
     emb: DataFrame,
     dims: int = 64,
@@ -1392,27 +1497,23 @@ def quantize_embeddings(
     everywhere). Zero vectors quantize to zeros with scale 0. Arrow
     kernel, one streamed pass, no shuffle."""
 
+    code_col, code_type = ("qcode", "binary") if packed else ("qvec", "array<int>")
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = _as_matrix(pdf[vec_col], dims)
-            scale = np.abs(m).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.floor(m / safe[:, None] + 0.5).astype(np.int32)
-            out = {
-                id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                "scale": scale,
-            }
-            if packed:
-                out["qcode"] = _pack_codes(q)
-            else:
-                out["qvec"] = list(q)
-            yield pd.DataFrame(out)
+            scale, q = _sq8_encode(_as_matrix(pdf[vec_col], dims))
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy(dtype=np.int64),
+                    "scale": scale,
+                    code_col: _pack_codes(q) if packed else list(q),
+                }
+            )
 
-    code_field = "qcode binary" if packed else "qvec array<int>"
     return emb.select(id_col, vec_col).mapInPandas(
-        kernel, f"{id_col} long, scale double, {code_field}"
+        kernel, f"{id_col} long, scale double, {code_col} {code_type}"
     )
 
 
@@ -1431,11 +1532,8 @@ def quantization_error_stats(
             if len(pdf) == 0:
                 continue
             m = _as_matrix(pdf[vec_col], dims)
-            scale = np.abs(m).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.floor(m / safe[:, None] + 0.5)
-            recon = q * safe[:, None]
-            err = np.abs(recon - m).max(axis=1)
+            scale, q = _sq8_encode(m)
+            err = np.abs(q * scale[:, None] - m).max(axis=1)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(dtype=np.int64), "max_err": err,
                  "scale": scale}
@@ -1494,68 +1592,28 @@ def ann_int8_mips_topk(
     narrower code column is what a persisted 100 TB code table and
     any code-bearing exchange actually ship."""
     q8 = quantize_embeddings(emb, dims, id_col, vec_col, packed=packed)
-    # query_filter is applied to EMB (columns id/embedding), matching
-    # the pq_topk/ivfadc_topk contract — a filter referencing the
-    # embedding column is legal here like everywhere else in the
-    # family (ADVICE r12). The selected rows are then quantized
-    # locally; scale is per-vector, so quantizing the subset yields
-    # bit-identical codes to filtering the quantized corpus.
-    qpdf = quantize_embeddings(
-        emb.filter(query_filter), dims, id_col, vec_col
-    ).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_scales = qpdf["scale"].to_numpy(dtype=np.float64)
-    q_mat = (
-        np.stack(qpdf["qvec"].to_numpy()).astype(np.int64)
-        if len(q_ids)
-        else np.empty((0, dims), dtype=np.int64)
-    )
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, q_scales, q_mat))
+    # the selected query rows are quantized locally; scale is
+    # per-vector, so quantizing the subset yields bit-identical codes
+    # to filtering the quantized corpus
+    q_ids, q_mat = _collect_queries(emb, query_filter, dims, id_col, vec_col)
+    q_scale, q_codes = _sq8_encode(q_mat)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, sq, qm = bc.value
-        if len(ids_q) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nid = pdf[id_col].to_numpy(dtype=np.int64)
-            ns = pdf["scale"].to_numpy(dtype=np.float64)
-            nm = (
-                _unpack_codes(pdf["qcode"], dims)
-                if packed
-                else np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            )
-            d = nm @ qm.T  # B×Q, exact: |entries| ≤ 127²·dims < 2^53
-            # pinned order: (scale_q · scale_x) first, then · dot —
-            # the oracle SQL parenthesizes identically
-            sim = (ns[:, None] * sq[None, :]) * d.astype(np.float64)
-            sim[np.equal.outer(nid, ids_q)] = -np.inf  # self-match
-            for qi in range(len(ids_q)):
-                order = np.lexsort((nid, -sim[:, qi]))[: min(k, len(nid))]
-                keep = order[np.isfinite(sim[order, qi])]
-                if len(keep):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_q[qi],
-                            "neighbor_id": nid[keep],
-                            "int_dot": d[keep, qi],
-                            "sim": sim[keep, qi],
-                        }
-                    )
+    def score(q, pdf: pd.DataFrame) -> dict:
+        sq, qm = q
+        ns = pdf["scale"].to_numpy(dtype=np.float64)
+        nm = (
+            _unpack_codes(pdf["qcode"], dims)
+            if packed
+            else _as_matrix(pdf["qvec"], dims, np.int64)
+        )
+        d = nm @ qm.T  # B×Q, exact: |entries| ≤ 127²·dims < 2^53
+        # pinned order: (scale_q · scale_x) first, then · dot —
+        # the oracle SQL parenthesizes identically
+        return {"int_dot": d, "sim": (ns[:, None] * sq[None, :]) * d.astype(np.float64)}
 
-    scored = q8.mapInPandas(
-        score,
-        "query_id long, neighbor_id long, int_dot long, sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _flat_scan(
+        q8, id_col, q_ids, (q_scale, q_codes.astype(np.int64)), score, k,
+        "int_dot long, sim double",
     )
 
 
@@ -1568,7 +1626,6 @@ def ivf_sq8_mips_topk(
     dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    packed: bool = False,
 ) -> DataFrame:
     """IVF-SQ8 maximum-inner-product top-k (r13): the other standard
     FAISS deployment shape (``IVF…,SQ8`` with METRIC_INNER_PRODUCT) —
@@ -1603,115 +1660,41 @@ def ivf_sq8_mips_topk(
     ``query_filter`` (the family contract — filters may reference the
     embedding column) and quantized locally; per-vector scale makes
     subset quantization bit-identical."""
-    spark = emb.sparkSession
-    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
-    c_norm = _ordered_norms(c_mat)
-    bc_c = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
+    c_ids, c_mat = _ivf_centroids(emb, n_centroids, dims, id_col, vec_col)
 
-    def assign_quantize(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            csim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            # argmax takes the first maximum — centroids are id-sorted,
-            # so ties resolve to the smallest centroid id (the SQL
-            # ORDER BY sim DESC, cid ASC convention)
-            scale = np.abs(mx).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.floor(mx / safe[:, None] + 0.5).astype(np.int32)
-            out = {
-                "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                "cluster": ids_c[np.argmax(csim, axis=1)],
-                "scale": scale,
-            }
-            # packed: 1 byte/dim binary codes — this is the column
-            # that actually RIDES the probe join, so the 4× width cut
-            # lands on the only code-bearing data path of the plan
-            if packed:
-                out["qcode"] = _pack_codes(q)
-            else:
-                out["qvec"] = list(q)
-            yield pd.DataFrame(out)
-
-    code_field = "qcode binary" if packed else "qvec array<int>"
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign_quantize,
-        f"neighbor_id long, cluster long, scale double, {code_field}",
-    )
-
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    probes = _angular_probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe)
-    # queries quantized locally with the identical kernel arithmetic
-    q_scale = (
-        np.abs(q_mat).max(axis=1) / 127.0
-        if len(q_ids)
-        else np.empty(0, dtype=np.float64)
-    )
-    q_safe = np.where(q_scale == 0.0, 1.0, q_scale)
-    q_codes = (
-        np.floor(q_mat / q_safe[:, None] + 0.5).astype(np.int64)
-        if len(q_ids)
-        else np.empty((0, dims), dtype=np.int64)
-    )
-    bc_q = spark.sparkContext.broadcast(
-        {
-            int(q_ids[i]): (q_codes[i], float(q_scale[i]))
-            for i in range(len(q_ids))
+    def encode(pdf, mx, best, best_sim, mc) -> dict:
+        scale, q = _sq8_encode(mx)
+        return {
+            "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
+            "scale": scale,
+            "qvec": list(q),
         }
-    )
 
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+    assigned = _cell_scan(
+        emb, c_ids, c_mat, dims, id_col, vec_col, encode,
+        "neighbor_id long, scale double, qvec array<int>",
     )
+    q_ids, q_mat = _collect_queries(emb, query_filter, dims, id_col, vec_col)
+    probes = _angular_probes(
+        emb.sparkSession, q_ids, q_mat, c_ids, c_mat, _ordered_norms(c_mat),
+        n_probe,
+    )
+    # queries quantized locally with the identical encoder
+    q_scale, q_codes = _sq8_encode(q_mat)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = bc_q.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nm = (
-                _unpack_codes(pdf["qcode"], dims)
-                if packed
-                else np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            )
-            ns = pdf["scale"].to_numpy(dtype=np.float64)
-            qm = np.stack([qmap[q][0] for q in pdf["query_id"]])
-            qs = np.asarray([qmap[q][1] for q in pdf["query_id"]])
-            d = np.einsum("ij,ij->i", nm, qm)  # exact: int64 partials
-            # pinned order: (scale_x · scale_q) first, then · dot —
-            # the oracle SQL parenthesizes identically
-            sim = (ns * qs) * d.astype(np.float64)
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            keep = _batch_topk_cut(qid, nid, sim, k)  # ≤ Q·k per batch
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[keep],
-                    "neighbor_id": nid[keep],
-                    "int_dot": d[keep],
-                    "sim": sim[keep],
-                }
-            )
+    def score(q, qi: np.ndarray, pdf: pd.DataFrame) -> dict:
+        qs, qm = q
+        nm = _as_matrix(pdf["qvec"], dims, np.int64)
+        ns = pdf["scale"].to_numpy(dtype=np.float64)
+        d = np.einsum("ij,ij->i", nm, qm[qi])  # exact: int64 partials
+        # pinned order: (scale_x · scale_q) first, then · dot —
+        # the oracle SQL parenthesizes identically
+        return {"int_dot": d, "sim": (ns * qs[qi]) * d.astype(np.float64)}
 
-    scored = cand.mapInPandas(
-        score, "query_id long, neighbor_id long, int_dot long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _probe_scan(
+        probes, assigned, "cluster", q_ids,
+        (q_scale, q_codes.astype(np.int64)), score, k,
+        "int_dot long, sim double",
     )
 
 
@@ -1724,7 +1707,6 @@ def ivf_sq8r_mips_topk(
     dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    packed: bool = False,
 ) -> DataFrame:
     """IVF-SQ8 MIPS top-k with RESIDUAL encoding (r13): the FAISS
     ``by_residual`` convention — each cell stores int8 codes of the
@@ -1758,99 +1740,44 @@ def ivf_sq8r_mips_topk(
     IVF indexes to residual encoding) at the cost of one centroid
     lookup per candidate at score time (the centroid matrix rides
     the same broadcast as the query rows)."""
-    spark = emb.sparkSession
-    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
-    c_norm = _ordered_norms(c_mat)
-    bc_c = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
+    c_ids, c_mat = _ivf_centroids(emb, n_centroids, dims, id_col, vec_col)
 
-    def assign_encode(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            csim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            a = np.argmax(csim, axis=1)  # first max = smallest cid
-            r = mx - mc[a]  # exact: one elementwise double subtract
-            scale = np.abs(r).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            codes = np.floor(r / safe[:, None] + 0.5).astype(np.int32)
-            out = {
-                "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                "cluster": ids_c[a],
-                "scale": scale,
-            }
-            if packed:
-                out["code"] = _pack_codes(codes)
-            else:
-                out["codes"] = list(codes)
-            yield pd.DataFrame(out)
+    def encode(pdf, mx, best, best_sim, mc) -> dict:
+        # r = x − c(x): one exact elementwise double subtract
+        scale, codes = _sq8_encode(mx - mc[best])
+        return {
+            "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
+            "scale": scale,
+            "codes": list(codes),
+        }
 
-    code_field = "code binary" if packed else "codes array<int>"
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign_encode,
-        f"neighbor_id long, cluster long, scale double, {code_field}",
+    assigned = _cell_scan(
+        emb, c_ids, c_mat, dims, id_col, vec_col, encode,
+        "neighbor_id long, scale double, codes array<int>",
+    )
+    q_ids, q_mat = _collect_queries(emb, query_filter, dims, id_col, vec_col)
+    probes = _angular_probes(
+        emb.sparkSession, q_ids, q_mat, c_ids, c_mat, _ordered_norms(c_mat),
+        n_probe,
     )
 
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    probes = _angular_probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe)
-    # asymmetric ADC: queries broadcast RAW (never quantized)
-    bc_q = spark.sparkContext.broadcast(
-        {int(q_ids[i]): q_mat[i] for i in range(len(q_ids))}
-    )
-
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = bc_q.value
-        ids_c, mc, _ = bc_c.value
+    def score(q, qi: np.ndarray, pdf: pd.DataFrame) -> dict:
+        mq, ids_c, mc = q
         row_of = {int(c): i for i, c in enumerate(ids_c)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qm = np.stack([qmap[q] for q in pdf["query_id"]])
-            crows = mc[[row_of[int(c)] for c in pdf["cluster"]]]
-            codes = (
-                _unpack_codes(pdf["code"], dims).astype(np.float64)
-                if packed
-                else np.stack(pdf["codes"].to_numpy()).astype(np.float64)
-            )
-            ns = pdf["scale"].to_numpy(dtype=np.float64)
-            # pinned order: q·c + scale · (q·codes) — the oracle SQL
-            # parenthesizes identically; both dots are left folds
-            sim = _ordered_rowdot(qm, crows) + ns * _ordered_rowdot(
-                qm, codes
-            )
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            keep = _batch_topk_cut(qid, nid, sim, k)  # ≤ Q·k per batch
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[keep],
-                    "neighbor_id": nid[keep],
-                    "sim": sim[keep],
-                }
-            )
+        qm = mq[qi]
+        crows = mc[[row_of[int(c)] for c in pdf["cluster"]]]
+        codes = _as_matrix(pdf["codes"], dims)
+        ns = pdf["scale"].to_numpy(dtype=np.float64)
+        # pinned order: q·c + scale · (q·codes) — the oracle SQL
+        # parenthesizes identically; both dots are left folds
+        return {
+            "sim": _ordered_rowdot(qm, crows)
+            + ns * _ordered_rowdot(qm, codes)
+        }
 
-    scored = cand.mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    # asymmetric ADC: queries broadcast RAW (never quantized)
+    return _probe_scan(
+        probes, assigned, "cluster", q_ids, (q_mat, c_ids, c_mat), score, k
     )
 
 
@@ -1971,6 +1898,21 @@ def _l2_normalized(
     )
 
 
+def _pq_assign(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Nearest codeword per subspace in L2 → (n, m) int32 codes:
+    argmin ‖x−c‖² = argmin (‖c‖² − 2x·c), fixed j-order, first min =
+    smallest codeword index."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for j in range(m):
+        c_sq = _ordered_rowdot(books[j], books[j])
+        d = c_sq[None, :] - 2.0 * _ordered_gemm(
+            x[:, j * dsub : (j + 1) * dsub], books[j]
+        )
+        codes[:, j] = np.argmin(d, axis=1)
+    return codes
+
+
 def pq_encode(
     emb: DataFrame,
     codebooks: np.ndarray,
@@ -1996,29 +1938,34 @@ def pq_encode(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         books = bc.value
-        # ||c||² per (subspace, codeword) — argmin ||x-c||² = argmin
-        # (||c||² - 2x·c); computed once per task, fixed j-order
-        c_sq = np.stack([_ordered_rowdot(books[j], books[j]) for j in range(m)])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mx = _as_matrix(pdf[vec_col], dims)
             if metric == "cosine":
                 mx = _unit_rows(mx)
-            codes = np.empty((len(mx), m), dtype=np.int32)
-            for j in range(m):
-                xj = mx[:, j * dsub : (j + 1) * dsub]
-                d = c_sq[j][None, :] - 2.0 * _ordered_gemm(xj, books[j])
-                codes[:, j] = np.argmin(d, axis=1)  # first min = smallest idx
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                    "codes": list(codes),
+                    "codes": list(_pq_assign(mx, books)),
                 }
             )
 
     return emb.select(id_col, vec_col).mapInPandas(
         kernel, f"{id_col} long, codes array<int>"
+    )
+
+
+def _adc_tables(q_mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """T[q, j, c] = q_j · books[j, c] — the ADC lookup tables,
+    Q×m×n_codes, one ordered GEMM per subspace."""
+    m, _, dsub = books.shape
+    return np.stack(
+        [
+            _ordered_gemm(q_mat[:, j * dsub : (j + 1) * dsub], books[j])
+            for j in range(m)
+        ],
+        axis=1,
     )
 
 
@@ -2054,60 +2001,23 @@ def pq_topk(
     """
     if metric not in ("cosine", "dot"):
         raise ValueError(f"pq_topk: unknown metric {metric!r}")
-    m, n_codes, dsub = codebooks.shape
-    dims = m * dsub
-    spark = emb.sparkSession
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
+    m, _, dsub = codebooks.shape
+    q_ids, q_mat = _collect_queries(emb, query_filter, m * dsub, id_col, vec_col)
     if metric == "cosine":
         q_mat = _unit_rows(q_mat)
-    # T[q, j, c] = q_j · c[j, c] — the ADC lookup tables, Q×m×n_codes
-    tables = np.stack(
-        [_ordered_gemm(q_mat[:, j * dsub : (j + 1) * dsub], codebooks[j]) for j in range(m)],
-        axis=1,
-    )
-    bc_q = spark.sparkContext.broadcast((q_ids, tables))
     codes = pq_encode(emb, codebooks, id_col, vec_col, metric)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, tabs = bc_q.value
-        if len(ids_q) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf["codes"].to_numpy())  # B×m int
-            nid = pdf[id_col].to_numpy(dtype=np.int64)
-            # sim[b, q] = Σ_j tabs[q, j, cm[b, j]] — fixed j-order fold
-            sim = np.zeros((len(cm), len(ids_q)), dtype=np.float64)
-            for j in range(m):
-                sim += tabs[:, j, :][:, cm[:, j]].T
-            sim[np.equal.outer(nid, ids_q)] = -np.inf  # self-match
-            # per-batch candidate cut (same contract as the exact scan:
-            # ≤ Q·k rows leave each task, ties resolved sim desc/id asc)
-            for qi in range(len(ids_q)):
-                order = np.lexsort((nid, -sim[:, qi]))[: min(k, len(nid))]
-                keep = order[np.isfinite(sim[order, qi])]
-                if len(keep):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_q[qi],
-                            "neighbor_id": nid[keep],
-                            "approx_sim": sim[keep, qi],
-                        }
-                    )
+    def score(tabs, pdf: pd.DataFrame) -> dict:
+        cm = _as_matrix(pdf["codes"], m, np.int64)  # B×m
+        # sim[b, q] = Σ_j tabs[q, j, cm[b, j]] — fixed j-order fold
+        sim = np.zeros((len(cm), len(tabs)), dtype=np.float64)
+        for j in range(m):
+            sim += tabs[:, j, :][:, cm[:, j]].T
+        return {"approx_sim": sim}
 
-    scored = codes.mapInPandas(
-        score, "query_id long, neighbor_id long, approx_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _flat_scan(
+        codes, id_col, q_ids, _adc_tables(q_mat, codebooks), score, k,
+        "approx_sim double", "approx_sim",
     )
 
 
@@ -2197,7 +2107,6 @@ def ivfadc_topk(
 
     def assign_encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cm, bks = bc.value
-        c_sq = np.stack([_ordered_rowdot(bks[j], bks[j]) for j in range(m)])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -2205,107 +2114,40 @@ def ivfadc_topk(
             if metric == "cosine":
                 mx = _unit_rows(mx)
             cell = np.argmax(_ordered_gemm(mx, cm), axis=1)
-            r = mx - cm[cell]
-            codes = np.empty((len(mx), m), dtype=np.int32)
-            for j in range(m):
-                rj = r[:, j * dsub : (j + 1) * dsub]
-                d = c_sq[j][None, :] - 2.0 * _ordered_gemm(rj, bks[j])
-                codes[:, j] = np.argmin(d, axis=1)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
                     "cell": cell.astype(np.int64),
-                    "codes": list(codes),
+                    "codes": list(_pq_assign(mx - cm[cell], bks)),
                 }
             )
 
     assigned = emb.select(id_col, vec_col).mapInPandas(
         assign_encode, "neighbor_id long, cell long, codes array<int>"
     )
-
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    if metric == "cosine" and len(q_ids):
+    q_ids, q_mat = _collect_queries(emb, query_filter, dims, id_col, vec_col)
+    if metric == "cosine":
         q_mat = _unit_rows(q_mat)
     # dot mode: q stays raw — probe ranking by q·c_unit is the same
     # angular order (‖q‖ scales every cell score equally), and the
     # base term q·c(x) must carry the query's true magnitude
-    probe_rows = []
-    base_sim = {}  # (query_id, cell) -> q·c
-    if len(q_ids):
-        qc = _ordered_gemm(q_mat, c_mat)
-        for i in range(len(q_ids)):
-            top = np.lexsort((np.arange(n_centroids), -qc[i]))[:n_probe]
-            for c in top:
-                probe_rows.append((int(q_ids[i]), int(c)))
-                base_sim[(int(q_ids[i]), int(c))] = float(qc[i, c])
-    probes = spark.createDataFrame(
-        probe_rows or [(-1, -1)], "query_id long, cell long"
-    )
-    if not probe_rows:
-        probes = probes.filter(F.lit(False))
-    tables = (
-        np.stack(
-            [
-                _ordered_gemm(q_mat[:, j * dsub : (j + 1) * dsub], books[j])
-                for j in range(m)
-            ],
-            axis=1,
-        )
-        if len(q_ids)
-        else np.empty((0, m, n_codes))
-    )
-    bc_q = spark.sparkContext.broadcast((q_ids, tables, base_sim))
-
-    cand = F.broadcast(probes).join(assigned, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
+    qc = _ordered_gemm(q_mat, c_mat)
+    probes = _probe_table(
+        spark, q_ids, qc, np.arange(n_centroids), n_probe, "cell"
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, tabs, base = bc_q.value
-        qpos = {int(q): i for i, q in enumerate(ids_q)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm_ = np.stack(pdf["codes"].to_numpy())
-            qi = np.asarray([qpos[int(q)] for q in pdf["query_id"]])
-            sim = np.asarray(
-                [
-                    base[(int(q), int(c))]
-                    for q, c in zip(pdf["query_id"], pdf["cell"])
-                ],
-                dtype=np.float64,
-            )
-            for j in range(m):
-                sim += tabs[qi, j, cm_[:, j]]
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "approx_sim": sim,
-                }
-            )
-            # per-batch ≤ Q·k cut, ties sim desc / id asc
-            parts = []
-            for q, grp in out.groupby("query_id", sort=True):
-                idx = np.lexsort(
-                    (grp["neighbor_id"].to_numpy(), -grp["approx_sim"].to_numpy())
-                )[: min(k, len(grp))]
-                parts.append(grp.iloc[idx])
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+    def score(q, qi: np.ndarray, pdf: pd.DataFrame) -> dict:
+        qc_, tabs = q
+        codes = _as_matrix(pdf["codes"], m, np.int64)
+        # base term q·c(x), then the residual lookups in fixed j-order
+        sim = qc_[qi, pdf["cell"].to_numpy(dtype=np.int64)]
+        for j in range(m):
+            sim += tabs[qi, j, codes[:, j]]
+        return {"approx_sim": sim}
 
-    scored = cand.mapInPandas(
-        score, "query_id long, neighbor_id long, approx_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _probe_scan(
+        probes, assigned, "cell", q_ids, (qc, _adc_tables(q_mat, books)),
+        score, k, "approx_sim double", "approx_sim",
     )
 
 
@@ -2636,42 +2478,16 @@ def semantic_cell_pairs(
     configuration) and is NOT scale-safe: at fixed k the within-cell
     quadratic grows as n²/k (measured slope 37.3 at 25×, SCALE.md).
     """
-    spark = emb.sparkSession
     if n_centroids is None:
         n_centroids = auto_centroids(emb.count(), target_cell_rows)
-    cpdf = (
-        emb.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).toPandas()
-    )
-    if len(cpdf) == 0:
-        raise ValueError(
-            f"no centroid rows: filter {id_col} < {n_centroids} matched "
-            "nothing (ids not starting at 0?) — supply a corpus whose id "
-            "head exists, or use the trained-KMeans variant"
-        )
-    c_order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
-    c_ids = cpdf[id_col].to_numpy(dtype=np.int64)[c_order]
-    c_mat = _as_matrix(cpdf[vec_col], dims)[c_order]
-    c_norm = _ordered_norms(c_mat)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            sim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "v": pdf[vec_col],
-                    "cluster": ids_c[np.argmax(sim, axis=1)],
-                }
-            )
-
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign, "id long, v array<float>, cluster long"
+    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
+    assigned = _cell_scan(
+        emb, c_ids, c_mat, dims, id_col, vec_col,
+        lambda pdf, mx, best, best_sim, mc: {
+            "id": pdf[id_col].to_numpy(dtype=np.int64),
+            "v": pdf[vec_col],
+        },
+        "id long, v array<float>",
     )
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -144,3 +144,37 @@ def test_rows_identical_across_partitionings(spark, name):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert sorted(map(repr, a)) == sorted(map(repr, b))
+
+
+# Entries backed by the scored top-k skeleton (operators/similarity.py):
+# their per-batch top-k cut runs once per Arrow batch, which
+# shuffle.partitions never changes — only the batch size does.
+SCORED_TOPK = [
+    "ann_topk",
+    "ann_mips_topk",
+    "ann_ivf_topk",
+    "ann_mips_ivf_topk",
+    "ann_int8_mips_topk",
+    "ann_ivf_sq8_mips_topk",
+    "ann_ivf_sq8r_mips_topk",
+    "pq_recall_audit",
+    "ivfadc_recall",
+]
+
+
+@pytest.mark.parametrize("name", SCORED_TOPK)
+def test_rows_identical_across_arrow_batch_sizes(spark, name):
+    q = entry_mod.queries()[name]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        a = [tuple(r) for r in q(spark, SF).collect()]
+        spark.conf.set(key, "7")
+        b = [tuple(r) for r in q(spark, SF).collect()]
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert a and a == b

@@ -323,11 +323,11 @@ def test_ivf_sq8_guards_and_zero_vector(spark):
 
 
 def test_batch_topk_cut_semantics():
-    # the per-batch candidate cut must reproduce the engines' total
-    # order exactly: sim desc with NaN ranked ABOVE +inf (Spark and
-    # DuckDB both sort NaN greatest), ties by neighbor id asc — a cut
-    # that dropped NaN rows would silently diverge from the rank
-    # window on degenerate (zero-norm cosine) inputs
+    # the per-batch candidate cut must reproduce the rank window's
+    # order exactly: sim desc with NaN ranked BELOW every number (a
+    # NaN score leaves mapInPandas as NULL, which Spark's desc and
+    # the oracles' NULLS LAST put after every value), ties by
+    # neighbor id asc
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators.similarity import (
         _batch_topk_cut,
     )
@@ -337,11 +337,11 @@ def test_batch_topk_cut_semantics():
     sim = np.array([0.5, np.nan, np.inf, 0.5, 1.0, 1.0, 2.0])
     keep = _batch_topk_cut(qids, nids, sim, k=2)
     got = sorted(zip(qids[keep], nids[keep]))
-    # query 1: NaN (nid 11) outranks +inf (nid 12); the 0.5 tie never
-    # reaches k. query 2: 2.0 first, then the 1.0 tie resolves to the
-    # smaller nid 20.
-    assert got == [(1, 11), (1, 12), (2, 20), (2, 22)]
-    # k larger than any group keeps everything
+    # query 1: +inf (nid 12) first, then the 0.5 tie resolves to the
+    # smaller nid 10; NaN (nid 11) ranks last. query 2: 2.0 first,
+    # then the 1.0 tie resolves to the smaller nid 20.
+    assert got == [(1, 10), (1, 12), (2, 20), (2, 22)]
+    # k larger than any group keeps everything, NaN rows included
     assert len(_batch_topk_cut(qids, nids, sim, k=10)) == len(sim)
     # tie at the boundary: equal sims cut by id asc
     t_q = np.zeros(3, dtype=np.int64)

@@ -1,7 +1,8 @@
 """Round-14 operator tests.
 
-Covers the r13 ADVICE closures — the NaN-above-+inf tiebreak in the
-per-batch top-k cut, and the degenerate-centroid guard that keeps the
+Covers the r13 ADVICE closures — the NaN tiebreak in the per-batch
+top-k cut (NaN ranked after every number, the order the rank window
+sees once NaN leaves the kernel as NULL), and the degenerate-centroid guard that keeps the
 IVF family's hash-exact oracle claim honest (investigation note: the
 advisor's premise that the oracle ranks NaN FIRST does not hold on the
 zero-norm path — DuckDB's ``/`` yields NULL on zero divisors and sorts
@@ -30,31 +31,61 @@ def _emb_df(spark, rows):
 # ---------------------------------------------- ADVICE r13 #1 (low)
 
 
-def test_batch_topk_cut_nan_above_inf_adverse_ids():
-    # ADVICE r13 repro: both NaN and +inf map to the same -inf value
-    # key, so before the fix the neighbor-id tiebreak decided between
-    # them — a +inf row with a SMALLER id outranked a NaN row at the
-    # k boundary, the opposite of Spark's NaN-greatest window order.
-    # The r13 unit test missed it because its NaN row happened to
-    # hold the smaller id; this one pins the adverse assignment.
+def test_batch_topk_cut_nan_below_inf_adverse_ids():
+    # NaN and +inf at a k boundary, with the ids assigned against the
+    # order: a NaN score reaches the rank window as NULL, which ranks
+    # after every number (even -inf), so the cut must keep +inf over
+    # NaN whatever the neighbor ids, and break NaN ties by id asc.
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators.similarity import (
         _batch_topk_cut,
     )
 
     qids = np.array([1, 1], dtype=np.int64)
-    nids = np.array([10, 11], dtype=np.int64)  # +inf gets the small id
-    sim = np.array([np.inf, np.nan])
+    nids = np.array([10, 11], dtype=np.int64)
+    sim = np.array([np.nan, np.inf])  # NaN gets the small id
     keep = _batch_topk_cut(qids, nids, sim, k=1)
-    assert list(nids[keep]) == [11]  # NaN strictly above +inf
-    # at k=2 both survive
+    assert list(nids[keep]) == [11]  # +inf strictly above NaN
+    # at k=2 both survive: NaN rows are ranked last, not dropped
     keep2 = _batch_topk_cut(qids, nids, sim, k=2)
     assert sorted(nids[keep2]) == [10, 11]
-    # multiple NaNs tie among themselves by id asc, still above +inf
-    q3 = np.zeros(3, dtype=np.int64)
-    n3 = np.array([9, 7, 8], dtype=np.int64)
-    s3 = np.array([np.nan, np.inf, np.nan])
-    keep3 = _batch_topk_cut(q3, n3, s3, k=2)
-    assert sorted(n3[keep3]) == [8, 9]
+    # NaN below -inf too; multiple NaNs tie among themselves by id asc
+    q3 = np.zeros(4, dtype=np.int64)
+    n3 = np.array([9, 7, 8, 6], dtype=np.int64)
+    s3 = np.array([np.nan, -np.inf, np.nan, np.nan])
+    keep3 = _batch_topk_cut(q3, n3, s3, k=3)
+    assert sorted(n3[keep3]) == [6, 7, 8]
+
+
+def test_zero_norm_corpus_row_ranks_last_not_in_top_k(spark):
+    # a zero-norm corpus vector scores NaN (0/0) against every query;
+    # it leaves the kernel as a NULL sim, which the rank window puts
+    # last. The per-batch cut must rank it last too — when it ranked
+    # NaN first, exhaustive IVF probing handed row 9 one of query 0's
+    # k slots (rank 5, NULL sim) and dropped neighbor 7.
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators import (
+        similarity as S,
+    )
+
+    rng = np.random.default_rng(0)
+    vecs = [rng.standard_normal(8) for _ in range(12)]
+    vecs[9] = np.zeros(8)
+    emb = _emb_df(spark, list(enumerate(vecs))).coalesce(1)
+    qf = F.col("vec_id") == 0
+    ivf = S.ann_ivf_topk(emb, qf, k=5, n_centroids=4, n_probe=4, dims=8)
+    bf = S.ann_bruteforce_topk(emb, qf, k=5, dims=8)
+    want = [4, 5, 10, 11, 7]
+    assert [r["neighbor_id"] for r in ivf.collect()] == want
+    assert [tuple(r) for r in ivf.collect()] == [tuple(r) for r in bf.collect()]
+    # with k past the numeric neighbors, both return the trailing
+    # NULL-sim row, as the NULLS LAST oracle order does
+    tail = S.ann_bruteforce_topk(emb, qf, k=11, dims=8).collect()
+    assert [(r["neighbor_id"], r["sim"]) for r in tail[-1:]] == [(9, None)]
+    assert [tuple(r) for r in tail] == [
+        tuple(r)
+        for r in S.ann_ivf_topk(
+            emb, qf, k=11, n_centroids=4, n_probe=4, dims=8
+        ).collect()
+    ]
 
 
 # ---------------------------------------------- ADVICE r13 #2 (low)
@@ -207,23 +238,18 @@ def test_pack_unpack_identity():
 def test_packed_code_layout_bit_identical(spark):
     # packed=True changes ONLY the storage layout of the code column
     # (array<int> -> 1-byte-per-dim binary); every scored row must be
-    # bit-identical, so the packed variants inherit the array-layout
-    # entries' hash-exact oracles by identity
+    # bit-identical, so the packed entry inherits the array-layout
+    # entry's hash-exact oracle by identity
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators import (
         similarity as S,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     flt = F.col("vec_id") < 8
-    for kern, kwargs in [
-        (S.ann_int8_mips_topk, {}),
-        (S.ivf_sq8_mips_topk, {"n_centroids": 16, "n_probe": 4}),
-        (S.ivf_sq8r_mips_topk, {"n_centroids": 16, "n_probe": 4}),
-    ]:
-        plain = kern(emb, flt, k=5, **kwargs).collect()
-        packed = kern(emb, flt, k=5, packed=True, **kwargs).collect()
-        assert len(plain) > 0
-        assert [tuple(r) for r in packed] == [tuple(r) for r in plain], kern
+    plain = S.ann_int8_mips_topk(emb, flt, k=5).collect()
+    packed = S.ann_int8_mips_topk(emb, flt, k=5, packed=True).collect()
+    assert len(plain) > 0
+    assert [tuple(r) for r in packed] == [tuple(r) for r in plain]
 
 
 def test_quantize_embeddings_packed_schema_and_width(spark):
@@ -404,9 +430,11 @@ def test_champion_forecast_constant_series_climatology(spark):
 def test_batch_topk_cut_matches_reference_order_property():
     # pure-numpy property test (no Spark round-trip, so examples are
     # cheap): against a reference ranking that literally spells the
-    # engine total order — NaN group first, then sim desc (+inf at
-    # the top of the finite/inf group), ties by neighbor id asc —
-    # the cut must keep exactly the reference's per-query top-k set.
+    # rank window's order — sim desc with NaN after every number
+    # (NaN reaches the window as NULL, NULLS LAST), ties by neighbor
+    # id asc — the cut must keep exactly the reference's per-query
+    # top-k set, and for ANY split of the rows into Arrow batches the
+    # union of the per-batch cuts must contain the global top-k.
     # Domains are tie-saturated and NaN/±inf-heavy on purpose.
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
@@ -427,8 +455,12 @@ def test_batch_topk_cut_matches_reference_order_property():
         deadline=None,
         suppress_health_check=[HealthCheck.too_slow],
     )
-    @given(rows=rows, k=st.integers(1, 5))
-    def check(rows, k):
+    @given(
+        rows=rows,
+        k=st.integers(1, 5),
+        cuts=st.lists(st.integers(0, 24), max_size=5),
+    )
+    def check(rows, k, cuts):
         qids = np.array([q for q, _ in rows], dtype=np.int64)
         # neighbor ids unique per row, assigned in REVERSE so adverse
         # (small id on the hotter sim) pairings occur constantly
@@ -438,18 +470,27 @@ def test_batch_topk_cut_matches_reference_order_property():
         got = {}
         for i in keep:
             got.setdefault(qids[i], set()).add(int(nids[i]))
+        want = set()
         for q in set(qids.tolist()):
             mask = qids == q
             order = sorted(
                 zip(nids[mask], sim[mask]),
                 key=lambda t: (
-                    0 if math.isnan(t[1]) else 1,
+                    1 if math.isnan(t[1]) else 0,
                     0.0 if math.isnan(t[1]) else -t[1],
                     t[0],
                 ),
             )
-            want = {int(n) for n, _ in order[:k]}
-            assert got.get(q, set()) == want, (q, k, list(zip(qids, nids, sim)))
+            top = {int(n) for n, _ in order[:k]}
+            assert got.get(q, set()) == top, (q, k, list(zip(qids, nids, sim)))
+            want |= {(q, n) for n in top}
+        # arbitrary batch split: contiguous runs between the cut points
+        bounds = sorted({0, len(rows), *(c for c in cuts if c < len(rows))})
+        union = set()
+        for a, b in zip(bounds, bounds[1:]):
+            for i in _batch_topk_cut(qids[a:b], nids[a:b], sim[a:b], k):
+                union.add((int(qids[a + i]), int(nids[a + i])))
+        assert want <= union, (bounds, k, list(zip(qids, nids, sim)))
 
     import math
 
